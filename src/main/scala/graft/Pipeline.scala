@@ -47,6 +47,19 @@ object Pipeline {
     * produce identical ODS rows (`lastfm_ingest_checked` oracle). The
     * quarantine write is an idempotent per-day overwrite — replays
     * don't duplicate reject rows.
+    *
+    * Steps that touch different tables run concurrently, each group
+    * joined before the next step starts: the three dim upserts, then
+    * (after the fact) the three mart upserts, and at the end the ODS and
+    * fact compactions ([[concurrently]]). The order between groups stays
+    * ODS → dims → fact → marts → publication → compaction. Siblings
+    * share nothing they write: each holds its own table's
+    * [[engine.WriterLease]] and commit lock, and each dim assigns its
+    * own surrogate ids, so the ids are those of a serial run. A sibling
+    * that fails does not stop the others, so a failed day may leave
+    * some siblings committed; every write is an idempotent upsert, so
+    * replaying the day (or [[backfill]], whose "done" marker needs all
+    * three marts) completes it.
     */
   def runDaily(spark: SparkSession, landingRoot: String, warehouse: String,
       date: String, checked: Boolean = false,
@@ -77,15 +90,16 @@ object Pipeline {
       graft.engine.Manifest.read(spark, odsPath(warehouse))
         .filter(col("source_date") === lit(date).cast("date")))
 
-    // 3. dims: append-only with stable ids
-    val dimArtist = upsertDim(spark, dimArtistPath(warehouse),
-      filled.select(col("artist_name")), "artist_id", Seq("artist_name"))
-    val dimCountry = upsertDim(spark, dimCountryPath(warehouse),
-      filled.select(col("country").as("country_name")),
-      "country_id", Seq("country_name"))
-    val dimSong = upsertDim(spark, dimSongPath(warehouse),
-      filled.select(col("song_name"), col("duration_filled").as("duration_sec")),
-      "song_id", Seq("song_name", "duration_sec"))
+    // 3. dims: append-only with stable ids, the three side by side
+    val Seq(dimArtist, dimCountry, dimSong) = concurrently(Seq(
+      () => upsertDim(spark, dimArtistPath(warehouse),
+        filled.select(col("artist_name")), "artist_id", Seq("artist_name")),
+      () => upsertDim(spark, dimCountryPath(warehouse),
+        filled.select(col("country").as("country_name")),
+        "country_id", Seq("country_name")),
+      () => upsertDim(spark, dimSongPath(warehouse),
+        filled.select(col("song_name"), col("duration_filled").as("duration_sec")),
+        "song_id", Seq("song_name", "duration_sec"))))
 
     // 4. fact for the date, keyed (date, country_id, song_rank)
     val fact = StarBuilder.fact(filled, dimArtist, dimSong, dimCountry)
@@ -96,15 +110,16 @@ object Pipeline {
     //    reference's duplicate-on-rerun DM inserts, SURVEY §7.4.5)
     val dayFact = graft.engine.Manifest.read(spark, factPath(warehouse))
       .filter(col("date") === lit(date).cast("date"))
-    Upsert.upsertPartitioned(spark, martAvgPath(warehouse),
-      Marts.avgSongDurationByCountry(dayFact, dimSong, dimCountry),
-      Seq("date", "country_name"), "date")
-    Upsert.upsertPartitioned(spark, martAppearancesPath(warehouse),
-      Marts.artistAppearancesByDate(dayFact, dimArtist),
-      Seq("date", "artist_name"), "date")
-    Upsert.upsertPartitioned(spark, martRoyaltiesPath(warehouse),
-      Marts.expectedArtistRoyaltiesByDate(dayFact, dimArtist),
-      Seq("date", "artist_name"), "date")
+    concurrently(Seq(
+      () => Upsert.upsertPartitioned(spark, martAvgPath(warehouse),
+        Marts.avgSongDurationByCountry(dayFact, dimSong, dimCountry),
+        Seq("date", "country_name"), "date"),
+      () => Upsert.upsertPartitioned(spark, martAppearancesPath(warehouse),
+        Marts.artistAppearancesByDate(dayFact, dimArtist),
+        Seq("date", "artist_name"), "date"),
+      () => Upsert.upsertPartitioned(spark, martRoyaltiesPath(warehouse),
+        Marts.expectedArtistRoyaltiesByDate(dayFact, dimArtist),
+        Seq("date", "artist_name"), "date")))
 
     // 6. one atomic publication pinning the day's consistent star
     //    (ODS + dims + fact + marts): a reader resolving the
@@ -125,10 +140,11 @@ object Pipeline {
     //    rewrites them at target size — snapshot-isolated, so readers
     //    (and the publication pinned above, which names VERSIONS) are
     //    untouched. The reference would need a separate maintenance DAG.
-    engine.Compaction.autoCompact(spark, odsPath(warehouse),
-      partitionCol = Some("source_date"), policy = autoCompactPolicy)
-    engine.Compaction.autoCompact(spark, factPath(warehouse),
-      partitionCol = Some("date"), policy = autoCompactPolicy)
+    concurrently(Seq(
+      () => engine.Compaction.autoCompact(spark, odsPath(warehouse),
+        partitionCol = Some("source_date"), policy = autoCompactPolicy),
+      () => engine.Compaction.autoCompact(spark, factPath(warehouse),
+        partitionCol = Some("date"), policy = autoCompactPolicy)))
     // 8. ANN indexes riding this pipeline's tables reindex themselves
     //    once their corpus outgrows the build (round 18 — the policy
     //    half of round 17's reindex verb: the staleness check is one
@@ -148,30 +164,68 @@ object Pipeline {
     * row store (BI/serving), idempotently per date — replaying a day
     * replaces its rows instead of duplicating them (the reference's raw
     * INSERTs duplicate on re-run; SURVEY §7.4.5).
+    *
+    * The three marts publish concurrently ([[concurrently]]); each goes
+    * to its own JDBC table over its own connection, so they share no
+    * rows and no lock. A publish that fails does not stop the others,
+    * so a failed call may leave some marts published for the date;
+    * re-running it replaces their rows again.
     */
   def publishMartsJdbc(spark: SparkSession, warehouse: String, url: String,
       date: String,
       props: java.util.Properties = new java.util.Properties()): Unit = {
     val d = java.sql.Date.valueOf(date)
-    Seq(
+    concurrently(Seq(
       martAvgPath(warehouse) -> "dm_avg_song_duration_by_country",
       martAppearancesPath(warehouse) -> "dm_artist_appearances_by_date",
       martRoyaltiesPath(warehouse) -> "dm_expected_artist_royalties_by_date")
-      .foreach { case (path, table) =>
+      .map { case (path, table) => () =>
         val slice = graft.engine.Manifest.read(spark, path)
           .filter(col("date") === lit(date).cast("date"))
         graft.engine.JdbcSink.publishMart(slice, url, table, "date", d, props)
-      }
+      })
+  }
+
+  /** Run independent steps side by side, one fresh thread each, and
+    * return their results in order once EVERY step has finished. Fresh
+    * threads rather than a shared pool: a new thread inherits the
+    * caller's Spark local properties (job group, scheduler pool,
+    * description) and active session, so the jobs a step submits are
+    * attributed, cancellable and pooled exactly like the caller's own.
+    * A failure never abandons a running sibling: all steps are joined
+    * first, then the first failure (in step order) is rethrown with the
+    * others attached as suppressed.
+    */
+  private def concurrently[A](steps: Seq[() => A]): Seq[A] = {
+    val results = new Array[Any](steps.size)
+    val errors = new Array[Throwable](steps.size)
+    val threads = steps.zipWithIndex.map { case (step, i) =>
+      val t = new Thread(() =>
+        try results(i) = step()
+        catch { case e: Throwable => errors(i) = e },
+        s"graft-pipeline-step-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    errors.filter(_ != null) match {
+      case Array() => results.toSeq.asInstanceOf[Seq[A]]
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+    }
   }
 
   /** Catch-up driver: run every landed date the warehouse hasn't FULLY
     * processed yet, oldest first (dims must grow in day order for stable
     * ids — the reference's `catchup=False` simply loses missed days;
-    * `ExternalTaskSensor` ordering is call order here). "Done" is read
-    * from the partition DIRECTORY NAMES of the royalties mart — the LAST
-    * table [[runDaily]] writes — so a run that crashed partway (ODS
-    * landed, star/marts missing) is correctly re-run, not skipped;
-    * every write is an idempotent upsert, so the repair replays safely.
+    * `ExternalTaskSensor` ordering is call order here). "Done" means
+    * the date is a live partition of ALL THREE marts — the last group
+    * [[runDaily]] writes, and written concurrently, so any one of them
+    * may be the one a crash left behind — so a run that crashed partway
+    * (ODS landed, star or some marts missing) is correctly re-run, not
+    * skipped; every write is an idempotent upsert, so the repair
+    * replays safely.
     * Planning is a file listing, O(days), not a data scan. Landed dirs
     * with no JSON files yet (created-but-unwritten drops) are skipped
     * this round instead of aborting the whole catch-up. `checked`
@@ -205,15 +259,16 @@ object Pipeline {
       Option(fs.globStatus(g)).exists(_.nonEmpty)
     }
     val landed = ls(landingRoot).filter(datePat.matches(_)).filter(hasJson)
-    // "done" comes from the royalties mart's LIVE snapshot partitions
+    // "done" comes from the marts' LIVE snapshot partitions
     // (manifest-aware, round 11): a raw directory listing would count a
     // crashed writer's uncommitted orphan files as a finished day and
     // skip the repair
-    val done = graft.engine.Manifest
-      .livePartitions(spark, martRoyaltiesPath(warehouse))
-      .filter(_.startsWith("date="))
-      .map(_.stripPrefix("date="))
-    val todo = (landed.toSet -- done.toSet).toSeq.sorted
+    val done = Seq(martAvgPath(warehouse), martAppearancesPath(warehouse),
+      martRoyaltiesPath(warehouse))
+      .map(m => graft.engine.Manifest.livePartitions(spark, m)
+        .filter(_.startsWith("date=")).map(_.stripPrefix("date=")).toSet)
+      .reduce(_ intersect _)
+    val todo = (landed.toSet -- done).toSeq.sorted
     todo.foreach { date =>
       graft.engine.Retry.withRetries(
         attempts = retries + 1, delayMs = retryDelayMs, sleep = retrySleep)(

@@ -444,14 +444,17 @@ object TpchFull {
       // "has a flagged line" bit — then counting per order is
       // value-identical (count(po_sk) skips nulls exactly as
       // countDistinct did) and shuffles the fact once at its natural
-      // (order, supplier) grain with no row multiplication.
+      // (order, supplier) grain with no row multiplication. The NULL
+      // supplier group counts toward neither total, as in the oracle's
+      // count(DISTINCT ...), which skips NULLs.
       val perOrder = li
         .groupBy(col("l_orderkey").as("po_ok"), col("l_suppkey").as("po_sk"))
         .agg(max(col("l_returnflag") === "R").as("has_r"))
         .groupBy(col("po_ok"))
         .agg(
           count(col("po_sk")).as("n_supp"),
-          sum(when(col("has_r"), 1L).otherwise(0L)).as("n_supp_r"))
+          sum(when(col("has_r") && col("po_sk").isNotNull, 1L).otherwise(0L))
+            .as("n_supp_r"))
       li.filter(col("l_returnflag") === "R")
         .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F")
           .select(col("o_orderkey")),

@@ -1,8 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.{ConcurrentWriterException, Manifest, WriterLease}
 
 /** The cross-day product contract: incremental daily runs with stable
   * dim ids, append-only fact, idempotent replays, and mart parity with a
@@ -14,6 +17,30 @@ class PipelineSpec extends AnyFunSuite {
 
   private val landing = graft.ingest.OdsBuilder.fixtureRoot
   private lazy val wh = Files.createTempDirectory("graft-wh").toString
+
+  /** The eight star tables as multisets of rows on natural keys: dim ids
+    * dropped, fact ids resolved through the dims, columns in name order.
+    */
+  private def naturalKeyed(w: String): Map[String, Map[Seq[Any], Int]] = {
+    val r = (p: String) => Manifest.read(spark, p)
+    val artist = r(Pipeline.dimArtistPath(w))
+    val country = r(Pipeline.dimCountryPath(w))
+    val song = r(Pipeline.dimSongPath(w))
+    val fact = r(Pipeline.factPath(w)).join(artist, "artist_id")
+      .join(country, "country_id").join(song, "song_id")
+      .drop("artist_id", "country_id", "song_id")
+    Seq("ods" -> r(Pipeline.odsPath(w)),
+      "dim_artist" -> artist.drop("artist_id"),
+      "dim_country" -> country.drop("country_id"),
+      "dim_song" -> song.drop("song_id"), "fact" -> fact,
+      "mart_avg" -> r(Pipeline.martAvgPath(w)),
+      "mart_appearances" -> r(Pipeline.martAppearancesPath(w)),
+      "mart_royalties" -> r(Pipeline.martRoyaltiesPath(w)))
+      .map { case (t, df) =>
+        t -> df.select(df.columns.sorted.map(col).toSeq: _*).collect()
+          .map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.length }
+      }.toMap
+  }
 
   test("two daily runs build the warehouse incrementally with stable dim ids") {
     Pipeline.runDaily(spark, landing, wh, "2024-05-01")
@@ -94,6 +121,84 @@ class PipelineSpec extends AnyFunSuite {
       .filter(col("date") === "2024-05-02").count() > 0)
     // ODS replay inside the repair appended nothing new
     assert(graft.engine.Manifest.read(spark, Pipeline.odsPath(wh3)).count() === 66)
+  }
+
+  test("backfill re-runs a date that only one mart is missing") {
+    // the marts commit concurrently, so royalties can land while a
+    // sibling mart crashes: the day is done only when all three have it
+    val whM = Files.createTempDirectory("graft-wh-onemart").toString
+    Pipeline.runDaily(spark, landing, whM, "2024-05-01")
+    Pipeline.runDaily(spark, landing, whM, "2024-05-02")
+    val avg = Pipeline.martAvgPath(whM)
+    Manifest.rollback(spark, avg, Manifest.currentVersion(spark, avg).get - 1)
+    assert(Manifest.read(spark, avg).filter(col("date") === "2024-05-02")
+      .count() === 0)
+    assert(Pipeline.backfill(spark, landing, whM) === Seq("2024-05-02"))
+    assert(Manifest.read(spark, avg).filter(col("date") === "2024-05-02")
+      .count() > 0)
+    assert(Pipeline.backfill(spark, landing, whM) === Seq.empty)
+  }
+
+  test("a foreign lease on one dim fails the day after its sibling dims " +
+      "finish, leaves no debris, and a replay heals the warehouse") {
+    val whF = Files.createTempDirectory("graft-wh-foreign").toString
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      spark.sparkContext.hadoopConfiguration)
+    val planted = new org.apache.hadoop.fs.Path(
+      Pipeline.dimSongPath(whF) + ".__writer_lease")
+    val out = fs.create(planted, false)
+    out.write("host=graft-other-host.invalid pid=1 acquired=elsewhere"
+      .getBytes("UTF-8"))
+    out.close()
+    intercept[ConcurrentWriterException](
+      Pipeline.runDaily(spark, landing, whF, "2024-05-01"))
+    // the sibling dims ran to their commits before the failure surfaced,
+    // and nothing after the dim group ran
+    Seq(Pipeline.dimArtistPath(whF), Pipeline.dimCountryPath(whF)).foreach {
+      p => assert(Manifest.currentVersion(spark, p).isDefined, s"$p not committed")
+    }
+    assert(Manifest.currentVersion(spark, Pipeline.factPath(whF)).isEmpty)
+    val left = Files.walk(java.nio.file.Paths.get(whF)).iterator().asScala
+      .map(_.getFileName.toString).toSeq
+    assert(left.filter(_.endsWith(".__writer_lease")) ===
+      Seq("dds_dim_song.__writer_lease"))
+    assert(!left.exists(_.contains("staging")), s"staging left in $left")
+    assert(WriterLease.breakLease(spark, Pipeline.dimSongPath(whF)))
+    Pipeline.runDaily(spark, landing, whF, "2024-05-01")
+    val clean = Files.createTempDirectory("graft-wh-clean").toString
+    Pipeline.runDaily(spark, landing, clean, "2024-05-01")
+    assert(naturalKeyed(whF) === naturalKeyed(clean))
+  }
+
+  test("every job runDaily and publishMartsJdbc submit carries the " +
+      "caller's job group") {
+    // concurrent steps run on fresh threads that inherit the caller's
+    // local properties, so cancelJobGroup and scheduler pools still
+    // reach them
+    val whG = Files.createTempDirectory("graft-wh-jobgroup").toString
+    val url = "jdbc:derby:memory:graft_pipeline_jobgroup;create=true"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graftshim.CoreShims.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "one pipeline day")
+    try {
+      Pipeline.runDaily(spark, landing, whG, "2024-05-01")
+      Pipeline.publishMartsJdbc(spark, whG, url, "2024-05-01")
+    } finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftshim.CoreShims.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ == "g"), s"job groups seen: ${seen.distinct}")
   }
 
   test("backfill's automatic retry heals a writer that died holding " +

@@ -33,6 +33,33 @@ class TpchFullSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested loop in:\n$p")
   }
 
+  test("q21: a flagged line with a NULL supplier counts as no supplier, " +
+      "as in the oracle") {
+    val spark = this.spark
+    import spark.implicits._
+    val tiny = java.nio.file.Files.createTempDirectory("graft-q21-null").toString
+    Seq[(Long, java.lang.Long, String)](
+      (1L, 1L, "R"), (1L, 2L, "N"), (1L, null, "R"))
+      .toDF("l_orderkey", "l_suppkey", "l_returnflag")
+      .write.parquet(s"$tiny/lineitem.parquet")
+    Seq((1L, "F")).toDF("o_orderkey", "o_orderstatus")
+      .write.parquet(s"$tiny/orders.parquet")
+    Seq((1L, "S1", 2), (2L, "S2", 2)).toDF("s_suppkey", "s_name", "s_nationkey")
+      .write.parquet(s"$tiny/supplier.parquet")
+    Seq((2, "NATION_2")).toDF("n_nationkey", "n_name")
+      .write.parquet(s"$tiny/nation.parquet")
+    val got = TpchFull.q21WaitingSupplier.run(spark, tiny).collect().toSeq
+    // the oracle SQL through Spark SQL, over the same files as views in
+    // a session of its own
+    val oracle = spark.newSession()
+    Seq("lineitem", "orders", "supplier", "nation").foreach(n =>
+      oracle.read.parquet(s"$tiny/$n.parquet").createOrReplaceTempView(n))
+    val want = oracle.sql(TpchFull.q21WaitingSupplier.oracle.get)
+      .collect().toSeq
+    assert(want.map(_.toSeq) === Seq(Seq("S1", 1L)))
+    assert(got.map(_.toSeq) === want.map(_.toSeq))
+  }
+
   test("q2: per-part minimum is a window, not a self-join") {
     val df = TpchFull.q2MinCostSupplier.run(spark, dir)
     assert(finalPlan(df).contains("Window"))
